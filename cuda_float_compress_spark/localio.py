@@ -6,16 +6,22 @@ pure pyarrow + the codec kernels. This is the table-level analog of the
 reference's local decompress call (``cuszplus_decompress`` is an
 in-process function, src/cuda_float_compress.cpp:88-91): a tool, test,
 or downstream service can pull a small extract without paying a JVM.
-Trust and visibility rules are IDENTICAL to the Spark decode paths:
+Trust, visibility and pruning are planned by the same driver-side
+planner as ``decode_table_direct`` (``operators.decode.plan_snapshot``):
 
 * only lineage-committed ``(part_id, run_id)`` pairs are read (crashed
-  runs are inert), with the same ``as_of`` snapshot semantics;
+  runs are inert), with the same ``as_of`` snapshot semantics and the
+  same refusal of a part committed by two runs; the schema is the union
+  of the committed runs' columns;
 * committed merge-on-read tombstones are applied (``_SUCCESS``-marked
   ``deletes/run-*`` dirs only);
-* chunk pruning uses the exact int-domain zone maps (int/timestamp/date
-  columns — where vmin/vmax are exact, so pruning can never drop a
-  matching row); string/float predicates are applied as exact filters
-  after decode.
+* chunk pruning applies the Spark readers' keep rules (``_keep_rule``):
+  manifest part rollups, then per-chunk zone maps of every ptype that
+  has them (ints, timestamps, dates, floats, string prefixes) and Bloom
+  filters for ``==``/``in``. Every rule is conservative, and every
+  predicate is ALSO applied as an exact filter after decode, so pruning
+  never drops a matching row; only the block files holding a kept chunk
+  are opened.
 
 Intended for metadata-scale and extract-scale reads (the driver-side
 use case); the 100 TB path is ``decode_table_direct``.
@@ -23,6 +29,7 @@ use case); the 100 TB path is ``decode_table_direct``.
 
 from __future__ import annotations
 
+import datetime as _dt
 import glob
 import os
 
@@ -33,56 +40,13 @@ import pyarrow.parquet as pq
 
 from cuda_float_compress_spark.operators import chunks as Ch
 from cuda_float_compress_spark.operators.decode import (
+    _META_FALLBACK,
     _STD_ARROW,
     _predicate_value,
+    plan_snapshot,
 )
 
 __all__ = ["read_table_local"]
-
-_INT_EXACT_PTYPES = ("int64", "int32", "timestamp_us", "timestamp_ntz",
-                     "date32")
-
-
-def _committed_pairs(out_dir: str, as_of: float | None) -> set[tuple]:
-    lin = pq.read_table(
-        f"{out_dir}/lineage",
-        columns=["part_id", "run_id", "status", "finished_at"],
-    )
-    mask = pc.equal(lin.column("status"), "done")
-    if as_of is not None:
-        mask = pc.and_(mask, pc.less_equal(
-            lin.column("finished_at"), float(as_of)))
-    lin = lin.filter(mask)
-    return set(zip(lin.column("part_id").to_pylist(),
-                   lin.column("run_id").to_pylist()))
-
-
-def _table_columns_local(out_dir: str) -> list[tuple[str, str]]:
-    man = pq.read_table(f"{out_dir}/manifest",
-                        columns=["col", "col_idx", "ptype"])
-    rows = sorted(
-        {(man.column("col_idx")[i].as_py(), man.column("col")[i].as_py(),
-          man.column("ptype")[i].as_py()) for i in range(man.num_rows)}
-    )
-    out: list[tuple[str, str]] = []
-    seen: dict[str, str] = {}
-    for _, col, ptype in rows:
-        prev = seen.get(col)
-        if prev is None:
-            seen[col] = ptype
-            out.append((col, ptype))
-        elif prev != ptype:
-            if {prev, ptype} == {"timestamp_us", "timestamp_ntz"}:
-                # same INT96-ambiguity coalesce as decode.table_columns
-                seen[col] = "timestamp_us"
-                out[[c for c, _ in out].index(col)] = (col, "timestamp_us")
-            else:
-                raise ValueError(
-                    f"column {col!r} appended with conflicting types "
-                    f"{prev!r} and {ptype!r}"
-                )
-    return out
-
 
 def _tombstone_set(out_dir: str, as_of: float | None = None) -> set[tuple]:
     runs = [
@@ -104,50 +68,40 @@ def _tombstone_set(out_dir: str, as_of: float | None = None) -> set[tuple]:
     return tombs
 
 
-def _chunk_pruned(pred_by_col: dict, names, vmins, vmaxs, i) -> bool:
-    """True when block row i's zone map PROVES no row matches (exact
-    int-domain columns only — callers pass only those predicates)."""
-    preds = pred_by_col.get(names[i])
-    if not preds:
-        return False
-    vmin, vmax = vmins[i], vmaxs[i]
-    if vmin is None or vmax is None:
-        return False
-    for op, key in preds:
-        if op == "==" and not (vmin <= key <= vmax):
-            return True
-        if op == ">=" and vmax < key:
-            return True
-        if op == ">" and vmax <= key:
-            return True
-        if op == "<=" and vmin > key:
-            return True
-        if op == "<" and vmin >= key:
-            return True
-        if op == "in" and all(not (vmin <= k <= vmax) for k in key):
-            return True
-    return False
+def _literal(lit, ptype: str):
+    """A predicate literal coerced the way the Spark readers' exact filter
+    (decode._exact_condition) and Spark's comparison coercion take it:
+    a string against an int column casts to the int, an int against a
+    date column is days since the epoch, a datetime against a date column
+    is its date."""
+    if ptype in ("int64", "int32") and isinstance(lit, str):
+        return int(lit)
+    if ptype == "date32":
+        if isinstance(lit, _dt.datetime):
+            return lit.date()
+        if isinstance(lit, (int, np.integer)):
+            return _dt.date(1970, 1, 1) + _dt.timedelta(days=int(lit))
+    return lit
+
+
+_COMPARE = {"==": pc.equal, "=": pc.equal, "<": pc.less,
+            "<=": pc.less_equal, ">": pc.greater, ">=": pc.greater_equal}
 
 
 def _exact_mask(tbl: pa.Table, predicates: list[tuple],
                 ptypes: dict) -> pa.Array | None:
     mask = None
     for col, op, lit in predicates:
-        arr = tbl.column(col)
-        if ptypes.get(col) in ("timestamp_us", "timestamp_ntz"):
-            lit = pa.scalar(lit, type=arr.type)
-        if op == "==":
-            m = pc.equal(arr, lit)
-        elif op == "<":
-            m = pc.less(arr, lit)
-        elif op == "<=":
-            m = pc.less_equal(arr, lit)
-        elif op == ">":
-            m = pc.greater(arr, lit)
-        elif op == ">=":
-            m = pc.greater_equal(arr, lit)
-        elif op == "in":
-            m = pc.is_in(arr, value_set=pa.array(list(lit)))
+        arr, ptype, conv = tbl.column(col), ptypes.get(col), _literal
+        if ptype in ("timestamp_us", "timestamp_ntz"):
+            # compare UTC microseconds, as _exact_condition does
+            arr, conv = arr.cast(pa.int64()), _predicate_value
+        if op == "in":
+            m = pa.array(np.zeros(len(arr), dtype=bool))
+            for member in lit:
+                m = pc.or_kleene(m, pc.equal(arr, conv(member, ptype)))
+        elif op in _COMPARE:
+            m = _COMPARE[op](arr, conv(lit, ptype))
         else:
             raise ValueError(f"unsupported predicate op: {op!r}")
         m = pc.fill_null(m, False)
@@ -166,8 +120,14 @@ def read_table_local(
     """Decode an encoded table into one in-memory ``pyarrow.Table``
     without Spark. ``predicates`` uses the decode-pushdown language
     ([(col, op, literal)], AND semantics; ops ==, <, <=, >, >=, in)."""
-    committed = _committed_pairs(out_dir, as_of)
-    cols = _table_columns_local(out_dir)
+    plan = plan_snapshot(out_dir, predicates=predicates, as_of=as_of,
+                         cap=None)
+    if plan is _META_FALLBACK:
+        raise ValueError(
+            f"{out_dir}: the table's metadata is not readable locally "
+            "(remote path or unreadable files); use decode_table_direct"
+        )
+    cols, committed, keep, files = plan
     if columns is not None:
         want_set = set(columns) | {c for c, _, _ in (predicates or [])}
         cols = [(c, p) for c, p in cols if c in want_set]
@@ -177,20 +137,10 @@ def read_table_local(
         for p_, c_, pos in _tombstone_set(out_dir, as_of=as_of):
             tombs_by_chunk.setdefault((p_, c_), []).append(pos)
 
-    # exact int-domain zone-map predicates prune chunks; everything is
-    # ALSO exact-filtered after decode, so pruning is purely an optimization
-    pred_by_col: dict[str, list] = {}
-    for c, op, lit in (predicates or []):
-        if ptypes.get(c) in _INT_EXACT_PTYPES and op in (
-                "==", "<", "<=", ">", ">=", "in"):
-            key = ([_predicate_value(v, ptypes[c]) for v in lit]
-                   if op == "in" else _predicate_value(lit, ptypes[c]))
-            pred_by_col.setdefault(c, []).append((op, key))
-
     pieces: list[pa.Table] = []
     meta_cols = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
-                 "params", "run_id", "vmin", "vmax", "payload"]
-    for f in sorted(glob.glob(f"{out_dir}/blocks/*.parquet")):
+                 "params", "run_id", "payload"]
+    for f in files:
         tbl = pq.ParquetFile(f, memory_map=True, buffer_size=0).read(
             columns=meta_cols, use_threads=False,
         )
@@ -202,22 +152,19 @@ def read_table_local(
         nnulls = tbl.column("n_nulls").to_pylist()
         params = tbl.column("params").to_pylist()
         run_ids = tbl.column("run_id").to_pylist()
-        vmins = tbl.column("vmin").to_pylist()
-        vmaxs = tbl.column("vmax").to_pylist()
         payloads = tbl.column("payload")
         by_chunk: dict[tuple, dict] = {}
         chunk_n: dict[tuple, int] = {}
-        dead: set[tuple] = set()
         for i in range(tbl.num_rows):
             key = (part[i], chunk[i])
-            if (part[i], run_ids[i]) not in committed:
+            if committed is not None and (part[i], run_ids[i]) not in committed:
                 continue
-            if _chunk_pruned(pred_by_col, names, vmins, vmaxs, i):
-                dead.add(key)
+            if keep is not None and (part[i] << 32 | chunk[i]) not in keep:
+                continue
             chunk_n[key] = ns[i]
             if names[i] in ptypes:
                 by_chunk.setdefault(key, {})[names[i]] = i
-        for key in sorted(k for k in chunk_n if k not in dead):
+        for key in sorted(chunk_n):
             colmap = by_chunk.get(key, {})
             n_rows = chunk_n[key]
             out = {}

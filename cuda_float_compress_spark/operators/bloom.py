@@ -14,14 +14,21 @@ Layout: the filter is a little-endian bitset (bit ``p`` lives at byte
 stored in the nullable ``bloom`` column of the blocks schema.  Hashing is
 the repo's portable-md5 scheme (see memory: portable-hash contract):
 ``h1 = md5[0:8]``, ``h2 = md5[8:16] | 1`` (both masked to 63 bits), probe
-``j`` at ``(h1 % m + j * (h2 % m)) % m``.  Build side (numpy/python in the
-encoder) and probe side (JVM expression over the metadata DataFrame)
-implement the same arithmetic; ``tests/test_bloom.py`` pins them against
+``j`` at ``(h1 % m + j * (h2 % m)) % m``.  The build side (python in the
+encoder) and the two probe sides implement the same arithmetic:
+``bloom_contains`` in Python and ``bloom_probe_expr`` as a JVM expression
+over the metadata DataFrame; ``tests/test_bloom.py`` pins them against
 each other.
 
-Scale: filters ride the existing blocks parquet (metadata-scale); probing
-is a whole-stage-codegen expression over chunk metadata rows — never a
-payload read, never driver-side iteration over chunks.
+Scale: filters ride the existing blocks parquet (metadata-scale) and are
+never a payload read. Tables whose metadata is local and within the
+driver-side file cap are probed on the driver: ``decode.plan_snapshot``
+reads the filters of the predicate column's chunk rows with pyarrow and
+probes each with ``bloom_contains`` (one probe per chunk, no Spark job).
+Other tables probe with ``bloom_probe_expr``, a whole-stage-codegen
+expression over chunk metadata rows (``decode.qualifying_chunks``). Both
+sides take the literal through ``decode._bloom_literal``, which puts an
+int-column literal in the decimal-text form the filters were built from.
 
 Parity note: the reference (catid/cuda_float_compress) has no predicate
 machinery at all — this extends the engine's pushdown layer

@@ -13,7 +13,14 @@ flattened data skew into uniform chunks).
 
 from __future__ import annotations
 
+import glob as _glob
+import os
+from typing import NamedTuple
+
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -47,8 +54,6 @@ _STD_ARROW = {
 
 
 def _repair_if_needed(out_dir: str) -> None:
-    import os
-
     if not os.path.exists(f"{out_dir}/blocks") and os.path.exists(
         f"{out_dir}/blocks_vacuum_old"
     ):
@@ -69,42 +74,41 @@ def blocks_of(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-# --- driver-side metadata fast path (r7 optimization) -----------------------
+# --- driver-side metadata fast path ------------------------------------------
 #
-# Reading table METADATA (lineage commit pairs, the union column schema)
-# through Spark costs 2-4 driver-blocking jobs (~0.2-0.4 s each: schema
-# inference + collect) before any payload work starts — measured ~1.1 s of
-# pure setup per decode at bench scale. The rows involved are metadata-scale
-# (one lineage row per part per run; one (col, ptype) row per column per
-# block file), so up to _META_FILE_CAP files they are read driver-side with
-# pyarrow — the same local-vs-Spark split the encode path already uses for
-# its manifest build (direct.py: <=256 block files => driver-side pyarrow).
-# Beyond the cap, or on any read error, every caller falls back to the
-# original Spark jobs — behavior is identical, only the transport changes.
+# Reading table METADATA (lineage commit pairs, the union column schema,
+# zone maps and Bloom filters) through Spark costs several driver-blocking
+# jobs (~0.2-0.4 s each: schema inference + collect) before any payload
+# work starts: 2.3 s of pure planning per point lookup on a 4-chunk table
+# (4-core host, perfbench encode_scan_lookup). The rows involved are
+# metadata-scale (one lineage row per part per run; one row per column per
+# chunk in the blocks files), so up to _META_FILE_CAP files they are read
+# driver-side with pyarrow — the same local-vs-Spark split the encode path
+# uses for its manifest build (direct.py: <=256 block files => driver-side
+# pyarrow). plan_snapshot is that reader for decode_table_direct and
+# read_table_local: the committed runs, the union schema, and the chunks
+# the manifest rollups, zone maps and Bloom filters keep, by the SAME
+# op→rule table (_keep_rule) that qualifying_parts and qualifying_chunks
+# apply as Spark expressions. Beyond the cap, for remote tables, or on a
+# read error, decode_table_direct plans with those Spark jobs instead —
+# same plan, only the transport changes.
 
 _META_FILE_CAP = 1024
 _META_FALLBACK = object()  # sentinel: metadata too large/remote for driver
 
 
-def _local_files(path: str, cap: int = _META_FILE_CAP) -> list[str] | None:
-    import glob as _glob
-    import os
-
+def _local_files(path: str, cap: int | None = _META_FILE_CAP) -> list[str] | None:
     files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files or len(files) > cap:
+    if not files or (cap is not None and len(files) > cap):
         return None
     return files
 
 
-def _lineage_rows_local(out_dir: str):
+def _lineage_rows_local(out_dir: str, cap: int | None = _META_FILE_CAP):
     """[(part_id, run_id, status, finished_at)] via driver-side pyarrow;
     None when the table has no lineage dir (externally assembled blocks —
     trusted as-is, matching committed_blocks); _META_FALLBACK when the
     lineage is too large for a driver read or unreadable."""
-    import os
-
-    import pyarrow.parquet as pq
-
     if "://" in str(out_dir) or str(out_dir).startswith("file:"):
         # hdfs://, s3a://, file:/...: os.path/glob cannot see the dir — a
         # bare isdir()==False here must mean FALLBACK (Spark read), never
@@ -113,7 +117,7 @@ def _lineage_rows_local(out_dir: str):
     lin_dir = os.path.join(out_dir, "lineage")
     if not os.path.isdir(lin_dir):
         return None
-    files = _local_files(lin_dir)
+    files = _local_files(lin_dir, cap)
     if files is None:
         return _META_FALLBACK
     rows = []
@@ -181,35 +185,6 @@ def _apply_union_schema(ordered: list[tuple[str, str]]) -> list[tuple[str, str]]
                 f"{prev!r} and {ptype!r}; re-encode the offending run"
             )
     return out
-
-
-def table_columns_local(files: list[str], committed: set | None):
-    """table_columns computed driver-side from the block files' metadata
-    columns (payloads never touched — parquet column projection). Rows
-    from uncommitted runs are excluded when ``committed`` is given, exactly
-    like the Spark path over committed_blocks. Returns _META_FALLBACK on
-    any read error."""
-    import pyarrow.parquet as pq
-
-    trips: set = set()
-    try:
-        for f in files:
-            t = pq.ParquetFile(f, memory_map=True, buffer_size=0).read(
-                columns=["part_id", "run_id", "col", "col_idx", "ptype"],
-                use_threads=False,
-            )
-            parts = t.column("part_id").to_pylist()
-            runs = t.column("run_id").to_pylist()
-            cols = t.column("col").to_pylist()
-            idxs = t.column("col_idx").to_pylist()
-            pts = t.column("ptype").to_pylist()
-            for i in range(t.num_rows):
-                if committed is not None and (parts[i], runs[i]) not in committed:
-                    continue
-                trips.add((idxs[i], cols[i], pts[i]))
-    except Exception:
-        return _META_FALLBACK
-    return _apply_union_schema([(c, p) for _, c, p in sorted(trips)])
 
 
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -362,26 +337,90 @@ def _predicate_value(v, ptype: str) -> int:
 
 
 def _bloom_literal(v, ptype: str):
-    """Bloom filters over int columns hash the DECIMAL TEXT of the values
-    (encode.py builds them from ``str(int)``), while zone maps compare the
-    ``_predicate_value``-normalized number — so a coerced probe literal
-    (``5.0`` against an int column) would hash ``b"5.0"`` vs the build
-    side's ``b"5"`` and yield a false "definitely absent". Coerce integral
-    literals to int before hashing; anything non-coercible probes as-is."""
+    """An equality literal in the form the chunk's Bloom filter was built
+    from. Filters exist for string, binary and int columns only
+    (encode.py); int filters hash the DECIMAL TEXT of the values
+    (``str(int)``), so an int-column literal probes as the decimal text of
+    the int the zone map compares (``_predicate_value``): ``5``, ``5.0``,
+    ``"05"`` and ``" 5"`` all probe ``b"5"``, as Spark's own ``k == "05"``
+    matches 5. None (no probe: the chunk is kept) when the literal has no
+    int form."""
     if ptype in ("int64", "int32"):
         try:
-            iv = int(v)
-            if iv == v:
-                return iv
-        except (TypeError, ValueError):
-            pass
+            return str(_predicate_value(v, ptype))
+        except (TypeError, ValueError, OverflowError):
+            return None
     return v
 
 
+# --- pruning rules: one op→rule table for both planners ---------------------
+
+
+class _Kleene:
+    """A pyarrow array with the Column operators ``_keep_rule`` uses, in
+    SQL three-valued logic (a comparison with null is null, & and | are
+    Kleene; a filter keeps only true) — so the rule evaluates on metadata
+    read with pyarrow exactly as it does on a Spark DataFrame."""
+
+    __slots__ = ("a",)
+
+    def __init__(self, a):
+        self.a = a
+
+    def isNull(self):  # noqa: N802 — the Column method name
+        return _Kleene(pc.is_null(self.a))
+
+    def __le__(self, v):
+        return _Kleene(pc.less_equal(self.a, v))
+
+    def __ge__(self, v):
+        return _Kleene(pc.greater_equal(self.a, v))
+
+    def __and__(self, other):
+        return _Kleene(pc.and_kleene(self.a, other.a))
+
+    def __or__(self, other):
+        return _Kleene(pc.or_kleene(self.a, other.a))
+
+
+def _keep_rule(op: str, value, ptype: str, vmin, vmax, maybe=None):
+    """Whether a chunk (or part) with zone map [vmin, vmax] MIGHT hold a
+    row satisfying ``col op value``: the keep rule of qualifying_parts and
+    qualifying_chunks (``vmin``/``vmax`` are Spark Columns) and of
+    plan_snapshot (``_Kleene`` arrays). Null stats keep (can't prune what
+    wasn't measured). ``maybe(literal)`` is the Bloom "might contain" of
+    the equality-shaped ops; None at part level (filters don't roll up)
+    and for blocks without the bloom column."""
+
+    def bloom(member):
+        lit = None if maybe is None else _bloom_literal(member, ptype)
+        return None if lit is None else maybe(lit)
+
+    if op in (">=", ">"):
+        return vmax.isNull() | (vmax >= _predicate_value(value, ptype))
+    if op in ("<=", "<"):
+        return vmin.isNull() | (vmin <= _predicate_value(value, ptype))
+    if op in ("==", "="):
+        v = _predicate_value(value, ptype)
+        keep = vmin.isNull() | ((vmin <= v) & (vmax >= v))
+        hit = bloom(value)
+        return keep if hit is None else keep & hit
+    if op == "in":
+        # keep the chunk if ANY member could fall in [vmin, vmax] (each
+        # member converts like an equality) AND might be in its filter
+        keep = vmin.isNull()
+        for member in value:
+            mv = _predicate_value(member, ptype)
+            hit, b = (vmin <= mv) & (vmax >= mv), bloom(member)
+            keep = keep | (hit if b is None else hit & b)
+        return keep
+    raise ValueError(f"unsupported predicate op: {op}")
+
+
 def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
-    """(part_id, chunk_id) keys whose zone-map stats MIGHT satisfy all
-    predicates — a metadata-only query (payload column never read). Chunks
-    without stats are kept (can't prune what wasn't measured)."""
+    """(part_id, chunk_id) keys whose zone-map stats and Bloom filters
+    MIGHT satisfy all predicates — a metadata-only query (payload column
+    never read). See _keep_rule; plan_snapshot is the driver-side twin."""
     from cuda_float_compress_spark.operators.bloom import bloom_probe_expr
 
     # tables encoded before the bloom column existed prune on zone maps only
@@ -389,42 +428,19 @@ def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
     stat_cols = ["part_id", "chunk_id", "vmin", "vmax", "ptype"] + (
         ["bloom"] if has_bloom else []
     )
-
-    def _bloom_maybe(member):
-        # "definitely absent" per the chunk's Bloom filter (null filter or
-        # non-bloomable value => maybe). Only equality-shaped ops use this.
-        if not has_bloom:
-            return F.lit(True)
-        return bloom_probe_expr(F.col("bloom"), member)
-
+    maybe = (
+        (lambda lit: bloom_probe_expr(F.col("bloom"), lit))
+        if has_bloom else None
+    )
     keys = blocks.select("part_id", "chunk_id").distinct()
     for col, op, value in predicates:
         stats = blocks.filter(F.col("col") == col).select(*stat_cols)
-        ptype = stats.select("ptype").first()["ptype"]
-        v = None if op == "in" else _predicate_value(value, ptype)
-        if op in (">=", ">"):
-            keep = F.col("vmax").isNull() | (F.col("vmax") >= v)
-        elif op in ("==", "="):
-            keep = (
-                F.col("vmin").isNull()
-                | ((F.col("vmin") <= v) & (F.col("vmax") >= v))
-            ) & _bloom_maybe(_bloom_literal(value, ptype))
-        elif op in ("<=", "<"):
-            keep = F.col("vmin").isNull() | (F.col("vmin") <= v)
-        elif op == "in":
-            # keep the chunk if ANY list member could fall in [vmin, vmax]
-            # (v is the list here; each member converts like an equality)
-            # AND, when a Bloom filter is present, might be in the chunk
-            any_hit = F.lit(False)
-            for member in value:
-                mv = _predicate_value(member, ptype)
-                any_hit = any_hit | (
-                    (F.col("vmin") <= mv) & (F.col("vmax") >= mv)
-                    & _bloom_maybe(_bloom_literal(member, ptype))
-                )
-            keep = F.col("vmin").isNull() | any_hit
-        else:
-            raise ValueError(f"unsupported predicate op: {op}")
+        first = stats.select("ptype").first()
+        if first is None:
+            # no chunk carries the column, so no row can satisfy it
+            return keys.limit(0)
+        keep = _keep_rule(op, value, first["ptype"], F.col("vmin"),
+                          F.col("vmax"), maybe)
         keys = keys.join(
             stats.filter(keep).select("part_id", "chunk_id"),
             ["part_id", "chunk_id"],
@@ -461,31 +477,230 @@ def qualifying_parts(
         first = stats.limit(1).collect()
         if not first:
             continue  # column unknown at part level (evolution) — keep all
-        ptype = first[0]["ptype"]
-        v = None if op == "in" else _predicate_value(value, ptype)
-        if op in (">=", ">"):
-            keep = F.col("vmax").isNull() | (F.col("vmax") >= v)
-        elif op in ("<=", "<"):
-            keep = F.col("vmin").isNull() | (F.col("vmin") <= v)
-        elif op in ("==", "="):
-            keep = F.col("vmin").isNull() | (
-                (F.col("vmin") <= v) & (F.col("vmax") >= v)
-            )
-        elif op == "in":
-            any_hit = F.lit(False)
-            for member in value:
-                mv = _predicate_value(member, ptype)
-                any_hit = any_hit | (
-                    (F.col("vmin") <= mv) & (F.col("vmax") >= mv)
-                )
-            keep = F.col("vmin").isNull() | any_hit
-        else:
-            raise ValueError(f"unsupported predicate op: {op}")
+        keep = _keep_rule(op, value, first[0]["ptype"], F.col("vmin"),
+                          F.col("vmax"))
         keys = keys.join(
             stats.filter(keep).select("part_id").distinct(),
             "part_id", "left_semi",
         )
     return [r["part_id"] for r in keys.collect()]
+
+
+# --- the driver-side snapshot planner ---------------------------------------
+
+
+class SnapshotPlan(NamedTuple):
+    """What a reader needs before it touches a payload."""
+
+    columns: list        # [(col, ptype)]: union schema of all committed runs
+    committed: set | None  # trusted (part_id, run_id), as_of/since-scoped;
+                           # None: no lineage, every block is trusted
+    keep_keys: set | None  # (part_id << 32 | chunk_id) keys kept by pruning
+                           # and chunk_keys; None: nothing to prune by
+    files: list          # the block files holding a live, kept chunk
+
+
+def _read_meta(path: str, want: list[str]) -> tuple[pa.Table, set]:
+    """The ``want`` columns of one metadata parquet file (mmap, one
+    thread), and the names the file has; a column the file predates reads
+    as nulls, like Spark's mergeSchema."""
+    pf = pq.ParquetFile(path, memory_map=True, buffer_size=0)
+    have = set(pf.schema_arrow.names)
+    t = pf.read(columns=[c for c in want if c in have], use_threads=False)
+    for c in want:
+        if c not in have:
+            t = t.append_column(c, pa.nulls(
+                t.num_rows, pa.binary() if c == "bloom" else pa.int64()))
+    return t, have
+
+
+def _keep_mask(rows: pa.Table, op: str, value) -> pa.Array:
+    """_keep_rule over one column's metadata rows (null → not kept). Rows
+    are evaluated under their own ptype; a column's ptypes agree except
+    timestamp_us/ntz, which normalize literals alike."""
+    from cuda_float_compress_spark.operators.bloom import bloom_contains
+
+    filters = (rows.column("bloom").to_pylist()
+               if "bloom" in rows.column_names else None)
+
+    def maybe(lit):
+        return _Kleene(pa.array(
+            [f is None or bloom_contains(f, lit) for f in filters],
+            pa.bool_()))
+
+    vmin, vmax = _Kleene(rows.column("vmin")), _Kleene(rows.column("vmax"))
+    ptypes = rows.column("ptype")
+    mask = None
+    for ptype in pc.unique(ptypes).to_pylist():
+        keep = _keep_rule(op, value, ptype, vmin, vmax,
+                          None if filters is None else maybe).a
+        m = pc.and_(pc.equal(ptypes, ptype), pc.fill_null(keep, False))
+        mask = m if mask is None else pc.or_(mask, m)
+    return mask
+
+
+def _qualifying_parts_local(out_dir: str, predicates: list[tuple], cap):
+    """qualifying_parts over the manifest read with pyarrow: the set of
+    part ids, None when there is no rollup to prune by, _META_FALLBACK
+    past the file cap."""
+    files = sorted(_glob.glob(os.path.join(out_dir, "manifest", "*.parquet")))
+    if not files:
+        return None
+    if cap is not None and len(files) > cap:
+        return _META_FALLBACK
+    parts: set = set()
+    passed: list = [None] * len(predicates)  # None: column never seen
+    has_rollups = False
+    for f in files:
+        t, have = _read_meta(f, ["part_id", "col", "ptype", "vmin", "vmax"])
+        has_rollups |= "vmin" in have
+        parts.update(pc.unique(t.column("part_id")).to_pylist())
+        for i, (col, op, value) in enumerate(predicates):
+            rows = t.filter(pc.equal(t.column("col"), col))
+            if rows.num_rows:
+                keep = rows.column("part_id").filter(_keep_mask(rows, op, value))
+                passed[i] = (passed[i] or set()) | set(keep.to_pylist())
+    if not has_rollups:
+        return None  # the manifest predates the rollup columns
+    for keep in passed:
+        if keep is not None:  # a column unknown at part level keeps all
+            parts &= keep
+    return parts
+
+
+def _trusted(t: pa.Table, pairs: set | None) -> pa.Array:
+    """Mask of the block rows whose (part_id, run_id) is in ``pairs``."""
+    if pairs is None:
+        return pa.array(np.ones(t.num_rows, dtype=bool))
+    by_run: dict = {}
+    for p, r in pairs:
+        by_run.setdefault(r, []).append(p)
+    mask = pa.array(np.zeros(t.num_rows, dtype=bool))
+    runs = t.column("run_id")
+    for r in pc.unique(runs).to_pylist():
+        if r in by_run:
+            mask = pc.or_(mask, pc.and_(
+                pc.equal(runs, r),
+                pc.is_in(t.column("part_id"),
+                         value_set=pa.array(by_run[r], pa.int32()))))
+    return pc.fill_null(mask, False)
+
+
+def _chunk_keys(t: pa.Table) -> np.ndarray:
+    part = t.column("part_id").to_numpy(zero_copy_only=False).astype(np.int64)
+    chunk = t.column("chunk_id").to_numpy(zero_copy_only=False)
+    return (part << np.int64(32)) | chunk.astype(np.int64)
+
+
+def _scan_blocks(files: list[str], pairs: set | None, scoped: set | None,
+                 conjs: list[tuple]):
+    """One metadata pass over the block files (payloads never read).
+    Returns the union schema of the rows ``pairs`` trusts; per conjunction
+    (predicates, part-id filter or None), the chunk keys that may satisfy
+    it; and per file the keys of its ``scoped``-trusted chunks."""
+    want = ["part_id", "chunk_id", "col", "col_idx", "ptype", "run_id"]
+    if conjs:
+        want += ["vmin", "vmax"]
+        if any(op in ("==", "=", "in") for preds, _ in conjs
+               for _, op, _ in preds):
+            want.append("bloom")
+    trips: set = set()
+    cands = [set() for _ in conjs]   # keys of trusted (part-kept) chunks
+    passes = [[set() for _ in preds] for preds, _ in conjs]
+    file_keys = []
+    for f in files:
+        t, _ = _read_meta(f, want)
+        t = t.filter(_trusted(t, pairs))
+        trips.update(
+            (r["col_idx"], r["col"], r["ptype"]) for r in
+            t.group_by(["col_idx", "col", "ptype"]).aggregate([]).to_pylist())
+        live = t if scoped is pairs else t.filter(_trusted(t, scoped))
+        file_keys.append((f, np.unique(_chunk_keys(live))))
+        for ci, (preds, parts) in enumerate(conjs):
+            rows = t
+            if parts is not None:
+                rows = t.filter(pc.is_in(
+                    t.column("part_id"),
+                    value_set=pa.array(sorted(parts), pa.int32())))
+            cands[ci].update(np.unique(_chunk_keys(rows)).tolist())
+            for pi, (col, op, value) in enumerate(preds):
+                sub = rows.filter(pc.equal(rows.column("col"), col))
+                if sub.num_rows:
+                    sub = sub.filter(_keep_mask(sub, op, value))
+                    passes[ci][pi].update(_chunk_keys(sub).tolist())
+    kept = []
+    for cand, per_pred in zip(cands, passes):
+        for s in per_pred:
+            cand &= s
+        kept.append(cand)
+    cols = _apply_union_schema([(c, p) for _, c, p in sorted(trips)])
+    return cols, kept, file_keys
+
+
+def table_columns_local(files: list[str], committed: set | None):
+    """table_columns computed driver-side from the block files' metadata
+    columns (payloads never touched — parquet column projection). Rows
+    from uncommitted runs are excluded when ``committed`` is given, exactly
+    like the Spark path over committed_blocks. Returns _META_FALLBACK on
+    any read error."""
+    try:
+        return _scan_blocks(files, committed, committed, [])[0]
+    except (OSError, KeyError, pa.ArrowException):
+        return _META_FALLBACK
+
+
+def plan_snapshot(
+    out_dir: str,
+    predicates: list[tuple] | None = None,
+    any_of: list[list[tuple]] | None = None,
+    as_of: float | None = None,
+    since: float | None = None,
+    chunk_keys: set | None = None,
+    cap: int | None = _META_FILE_CAP,
+):
+    """The driver-side snapshot planner of decode_table_direct and
+    read_table_local: lineage, manifest rollups and the metadata columns
+    of the block files, read with pyarrow, in one pass and no Spark job.
+
+    Returns a SnapshotPlan: the committed pairs (the trust set is
+    ``as_of``/``since``-scoped, the schema is the union of ALL committed
+    runs — as decode_table_direct always had it), the chunk keys kept by
+    ``predicates`` (AND: qualifying_parts, then qualifying_chunks), by
+    ``any_of`` (OR of ANDs: the union of each conjunction's
+    qualifying_chunks) and by ``chunk_keys``, and the block files that
+    hold them. The keep rules are _keep_rule, the ones the Spark path
+    evaluates. _META_FALLBACK when the metadata is remote, past ``cap``
+    files, or unreadable (callers fall back to the Spark path)."""
+    files = _local_files(f"{out_dir}/blocks", cap)
+    lrows = _META_FALLBACK if files is None else _lineage_rows_local(out_dir, cap)
+    if lrows is _META_FALLBACK:
+        return _META_FALLBACK
+    pairs = None if lrows is None else _committed_pairs(lrows)
+    scoped = pairs
+    if lrows is not None and (as_of is not None or since is not None):
+        scoped = _committed_pairs(lrows, as_of=as_of, since=since)
+    try:
+        conjs = []
+        if predicates:
+            parts = _qualifying_parts_local(out_dir, predicates, cap)
+            if parts is _META_FALLBACK:
+                return _META_FALLBACK
+            conjs.append((predicates, parts))
+        conjs += [(conj, None) for conj in any_of or []]
+        cols, kept, file_keys = _scan_blocks(files, pairs, scoped, conjs)
+    except (OSError, KeyError, OverflowError, pa.ArrowException):
+        return _META_FALLBACK
+    keep = kept[0] if predicates else None
+    if any_of:
+        union = set().union(*kept[1 if predicates else 0:])
+        keep = union if keep is None else keep & union
+    if chunk_keys is not None:
+        keep = set(chunk_keys) if keep is None else keep & set(chunk_keys)
+    files = [
+        f for f, ks in file_keys
+        if len(ks) and (keep is None or not keep.isdisjoint(ks.tolist()))
+    ]
+    return SnapshotPlan(cols, scoped, keep, files)
 
 
 _EXACT_STAT_PTYPES = (

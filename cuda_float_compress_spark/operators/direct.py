@@ -58,6 +58,67 @@ def _to_us_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
 
 
+def _plan_with_spark(spark: SparkSession, out_dir: str, predicates, any_of,
+                     as_of, since, chunk_keys):
+    """decode_table_direct's plan from Spark metadata jobs: the fallback of
+    plan_snapshot for tables whose metadata is remote or past its file cap
+    (same SnapshotPlan, same keep rules, every block file listed)."""
+    from cuda_float_compress_spark.operators.decode import (
+        SnapshotPlan,
+        committed_blocks,
+        qualifying_chunks,
+        qualifying_parts,
+        table_columns,
+    )
+
+    blocks = committed_blocks(spark, out_dir)
+    cols = table_columns(blocks)
+    # committed (part_id, run_id) pairs: workers read block files
+    # directly with pyarrow, so the lineage trust filter ships as a
+    # closure set (metadata-scale — one entry per part per run)
+    try:
+        lin = spark.read.parquet(f"{out_dir}/lineage").filter(
+            F.col("status") == "done"
+        )
+        if as_of is not None:
+            lin = lin.filter(F.col("finished_at") <= float(as_of))
+        if since is not None:
+            lin = lin.filter(F.col("finished_at") > float(since))
+        lin_rows = lin.select("part_id", "run_id").distinct().collect()
+        committed = {(r["part_id"], r["run_id"]) for r in lin_rows}
+    except Exception:
+        committed = None
+
+    def keys_of(blk, preds):
+        return {(r["part_id"] << 32) | r["chunk_id"]
+                for r in qualifying_chunks(blk, preds).collect()}
+
+    keep_keys: set[int] | None = None
+    if predicates:
+        # level 1: whole-part pruning from the manifest rollups (the chunk
+        # metadata scan below shrinks to the surviving parts); level 2:
+        # chunk-level zone maps / Bloom — the key set is manifest-scale and
+        # ships to tasks via the closure
+        keep_parts = qualifying_parts(spark, out_dir, predicates)
+        keep_keys = keys_of(
+            blocks.filter(F.col("part_id").isin(keep_parts))
+            if keep_parts is not None else blocks,
+            predicates,
+        )
+    if any_of:
+        union_keys = set().union(*(keys_of(blocks, c) for c in any_of))
+        keep_keys = (
+            union_keys if keep_keys is None else keep_keys & union_keys
+        )
+    if chunk_keys is not None:
+        keep_keys = (
+            set(chunk_keys) if keep_keys is None
+            else keep_keys & set(chunk_keys)
+        )
+    files = glob.glob(f"{out_dir}/blocks/*.parquet")
+    return SnapshotPlan(cols, committed, keep_keys, files)
+
+
 def decode_table_direct(spark: SparkSession, out_dir: str,
                         columns: list[str] | None = None,
                         predicates: list[tuple] | None = None,
@@ -90,103 +151,27 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
 
     from cuda_float_compress_spark.operators import chunks as Ch
     from cuda_float_compress_spark.operators.decode import (
+        _META_FALLBACK,
         _SPARK_TYPE,
         _STD_ARROW,
-        blocks_of,
-        table_columns,
-    )
-
-    from cuda_float_compress_spark.operators.decode import (
         _exact_filter,
-        qualifying_chunks,
-    )
-
-    from cuda_float_compress_spark.operators.decode import (
-        _META_FALLBACK,
-        _committed_pairs,
-        _lineage_rows_local,
-        _local_files,
         _repair_if_needed,
-        committed_blocks,
-        table_columns_local,
+        plan_snapshot,
     )
 
-    # metadata setup (schema + committed pairs) via driver-side pyarrow
-    # when the table's metadata is local and file-count-bounded — the Spark
-    # metadata jobs this replaces cost ~1.1 s of pure driver setup per
-    # decode at bench scale (see decode.py fast-path note). Falls back to
-    # the original Spark jobs for big/remote tables or on any read error.
+    # planning (committed runs, schema, pruning, the files to read) runs
+    # driver-side with pyarrow when the table's metadata is local and
+    # file-count-bounded — no Spark job before the decode job, which gets
+    # only the files holding a kept chunk (see decode.py fast-path note).
+    # Big/remote tables, or any read error, plan with the Spark jobs.
     _repair_if_needed(out_dir)
-    blocks = None  # the Spark blocks frame — only needed for pruning below
-    cols = None
-    committed: set | None = None
-    blk_files = _local_files(f"{out_dir}/blocks")
-    lrows = _lineage_rows_local(out_dir) if blk_files is not None else _META_FALLBACK
-    if blk_files is not None and lrows is not _META_FALLBACK:
-        # schema = union over ALL committed runs (no time scoping — parity
-        # with the Spark path, which derives it from committed_blocks
-        # without as_of); the trust set IS time-scoped
-        pairs_all = _committed_pairs(lrows) if lrows is not None else None
-        cols = table_columns_local(blk_files, pairs_all)
-        if cols is not _META_FALLBACK and lrows is not None:
-            committed = (
-                pairs_all if (as_of is None and since is None)
-                else _committed_pairs(lrows, as_of=as_of, since=since)
-            )
-    if cols is None or cols is _META_FALLBACK:
-        blocks = committed_blocks(spark, out_dir)
-        cols = table_columns(blocks)
-        # committed (part_id, run_id) pairs: workers read block files
-        # directly with pyarrow, so the lineage trust filter ships as a
-        # closure set (metadata-scale — one entry per part per run)
-        try:
-            lin = spark.read.parquet(f"{out_dir}/lineage").filter(
-                F.col("status") == "done"
-            )
-            if as_of is not None:
-                lin = lin.filter(F.col("finished_at") <= float(as_of))
-            if since is not None:
-                lin = lin.filter(F.col("finished_at") > float(since))
-            lin_rows = lin.select("part_id", "run_id").distinct().collect()
-            committed = {(r["part_id"], r["run_id"]) for r in lin_rows}
-        except Exception:
-            committed = None
+    plan = plan_snapshot(out_dir, predicates=predicates, any_of=any_of,
+                         as_of=as_of, since=since, chunk_keys=chunk_keys)
+    if plan is _META_FALLBACK:
+        plan = _plan_with_spark(spark, out_dir, predicates, any_of, as_of,
+                                since, chunk_keys)
+    cols, committed, keep_keys, files = plan
     all_ptypes = dict(cols)
-    keep_keys: set[int] | None = None
-    if predicates or any_of:
-        if blocks is None:
-            blocks = committed_blocks(spark, out_dir)
-    if predicates:
-        from cuda_float_compress_spark.operators.decode import (
-            qualifying_parts,
-        )
-
-        # level 1: whole-part pruning from the manifest rollups (the chunk
-        # metadata scan below shrinks to the surviving parts)
-        keep_parts = qualifying_parts(spark, out_dir, predicates)
-        pruned = (
-            blocks.filter(F.col("part_id").isin(keep_parts))
-            if keep_parts is not None else blocks
-        )
-        # level 2: chunk-level zone maps / Bloom; key set is manifest-scale
-        # (one entry per surviving chunk) and ships to tasks via the closure
-        keys = qualifying_chunks(pruned, predicates).collect()
-        keep_keys = {(r["part_id"] << 32) | r["chunk_id"] for r in keys}
-    if any_of:
-        union_keys: set[int] = set()
-        for conj in any_of:
-            union_keys |= {
-                (r["part_id"] << 32) | r["chunk_id"]
-                for r in qualifying_chunks(blocks, conj).collect()
-            }
-        keep_keys = (
-            union_keys if keep_keys is None else keep_keys & union_keys
-        )
-    if chunk_keys is not None:
-        keep_keys = (
-            set(chunk_keys) if keep_keys is None
-            else keep_keys & set(chunk_keys)
-        )
     if columns is not None:
         want = set(columns) | {c for c, _, _ in (predicates or [])} | {
             c for conj in (any_of or []) for c, _, _ in conj
@@ -222,10 +207,7 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     # batch; parallelize preserves element->partition order.
     import heapq
 
-    files = sorted(
-        glob.glob(f"{out_dir}/blocks/*.parquet"),
-        key=lambda f: -os.path.getsize(f),
-    )
+    files = sorted(files, key=lambda f: -os.path.getsize(f))
     slots = max(spark.sparkContext.defaultParallelism, 1)
     n_tasks = max(1, min(len(files), slots * 4))
     heap = [(0, i) for i in range(n_tasks)]

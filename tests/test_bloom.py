@@ -176,3 +176,59 @@ def test_probe_with_coerced_int_literal_not_falsely_absent(spark, encoded_docs):
         blocks, [("doc_id", "in", [123, 250])]
     ).collect()
     assert sorted(map(key, in_float)) == sorted(map(key, in_int))
+
+
+def test_string_literal_on_int_bloom_column_keeps_its_chunk(spark, tmp_path):
+    """Spark's own ``k == "05"`` on an int column matches 5, so the Bloom
+    probe must hash the int the zone map compares ("5"), not the literal's
+    text ("05", " 5"): a false "definitely absent" silently dropped the
+    row. Both readers, every literal form, equality and IN."""
+    import numpy as np
+
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    out = str(tmp_path / "intbloom")
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(40)],
+                               "k: long, s: string")
+    encode_table(spark, df, out, url_col="s", n_parts=1, resume=False,
+                 sort_keys=["k"], chunk_rows=8, bloom_cols=["k"])
+    assert df.filter(F.col("k") == "05").count() == 1
+    for pred in [("k", "==", "05"), ("k", "==", " 5"), ("k", "==", 5.0),
+                 ("k", "==", np.int64(5)), ("k", "in", ["05", 33])]:
+        want = [(5, "v5")] + ([(33, "v33")] if pred[1] == "in" else [])
+        got = decode_table_direct(spark, out, predicates=[pred]).collect()
+        assert sorted((r["k"], r["s"]) for r in got) == want, pred
+        loc = read_table_local(out, predicates=[pred])
+        assert sorted(zip(loc.column("k").to_pylist(),
+                          loc.column("s").to_pylist())) == want, pred
+
+
+def test_bloom_lookup_is_one_single_task_job(spark, encoded_docs):
+    """A url lookup on a local Bloom table plans on the driver: the only
+    Spark job is the decode itself, and it reads only the one file that
+    holds the kept chunk. Guards against metadata jobs creeping back."""
+    import uuid
+
+    from cuda_float_compress_spark.operators.decode import plan_snapshot
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+
+    preds = [("url", "==", "doc://d/123")]
+    assert len(plan_snapshot(encoded_docs, predicates=preds).keep_keys) == 1
+    sc = spark.sparkContext
+    group = f"bloom-lookup-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bloom lookup job count")
+    try:
+        rows = decode_table_direct(spark, encoded_docs,
+                                   predicates=preds).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [r["doc_id"] for r in rows] == [123]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
+    tasks = sum(tracker.getStageInfo(s).numTasks
+                for s in tracker.getJobInfo(jobs[0]).stageIds)
+    assert tasks <= 1, tasks
